@@ -1880,3 +1880,78 @@ def test_tfidf_wc_subtree_reused(spark, sf_dir):
     )
     assert "isFinalPlan=true" in plan
     assert "ReusedExchange" in plan
+
+
+def _operator_names(plan) -> list[str]:
+    """Node names of a physical plan tree, through adaptive plans and their
+    query stages (an InMemoryTableScan's cached plan is not a child, so it
+    is not walked)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _operator_names(plan.executedPlan())
+    names = [plan.nodeName()]
+    if names[0].endswith("QueryStage"):
+        return names + _operator_names(plan.plan())
+    children = plan.children()
+    for i in range(children.size()):
+        names += _operator_names(children.apply(i))
+    return names
+
+
+def _jobs_of(spark, action) -> int:
+    """Spark jobs ``action`` starts on this thread (job group + status
+    tracker)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-quality-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def span_store(spark, sf_dir):
+    from zipkin_storage_kafka_spark.plans.query_api import SpanStore
+
+    store = SpanStore(spans_from_events(spark, sf_dir))
+    yield store
+    store.close()
+
+
+@pytest.mark.parametrize("method,args", [
+    ("get_service_names", ()),
+    ("get_span_names", ("svc_1",)),
+    ("get_remote_service_names", ("svc_1",)),
+    ("get_autocomplete_keys", ()),
+    ("get_autocomplete_values", ("environment",)),
+])
+def test_name_lookups_are_local_relations(spark, span_store, method, args):
+    """Name requests are answered from the driver-side name stores: the
+    executed plan is one LocalTableScan and collect() starts no job."""
+    getattr(span_store, method)(*args).collect()  # builds the stores
+    df = getattr(span_store, method)(*args)
+    assert _operator_names(df._jdf.queryExecution().executedPlan()) == [
+        "LocalTableScan"
+    ]
+    assert _jobs_of(spark, df.collect) == 0
+
+
+def test_trace_search_is_one_shuffle_free_stage(spark, span_store):
+    """get_traces and get_traces_by_ids read the persisted trace table:
+    no Exchange above the cached scan, one job per request."""
+    from zipkin_storage_kafka_spark.plans.query_api import QueryRequest
+
+    ids = [r["trace_id"] for r in span_store.get_traces(
+        QueryRequest(limit=3)).collect()]
+    for df in (
+        span_store.get_traces(QueryRequest(service_name="svc_1", limit=10)),
+        span_store.get_traces(QueryRequest(annotation_query={"error": ""})),
+        span_store.get_traces_by_ids(ids),
+    ):
+        assert _jobs_of(spark, df.collect) == 1
+        names = _operator_names(df._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScan" in names, names
+        assert not any("Exchange" in n for n in names), names

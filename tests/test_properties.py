@@ -8,7 +8,8 @@ DataFrame, then assert engine invariants that must hold for every input:
 - dependency link counts conserve child-span parent edges
 - Trace.merge (dedup) is idempotent
 - normalize_trace_id is idempotent and produces canonical form
-- find_traces results are always within the requested time range + limit
+- find_traces results are always within the requested time range + limit,
+  newest first, and each has a span matching every condition
 """
 
 from __future__ import annotations
@@ -1073,3 +1074,130 @@ def test_spec_args_ignores_quoted_literals(args):
     plan = "windowspecdefinition(" + ", ".join(args) + "), trailing junk"
     got = _spec_args(plan, len("windowspecdefinition("))
     assert got == args
+
+
+search_span_strategy = st.fixed_dictionaries(
+    {
+        "trace_n": st.integers(0, 7),
+        "ts_off": st.integers(0, 7200),
+        "svc_n": st.integers(0, 2),
+        "name_n": st.integers(0, 2),
+        "duration": st.one_of(st.none(), st.integers(1, 5000)),
+        "env": st.sampled_from([None, "dev", "prod"]),
+        "tag_k": st.sampled_from([None, "1", "2"]),
+        "error": st.booleans(),
+    }
+)
+search_request_strategy = st.fixed_dictionaries(
+    {
+        "service_name": st.one_of(st.none(), st.sampled_from(["svc_0", "svc_1", "svc_9"])),
+        "span_name": st.one_of(st.none(), st.sampled_from(["op_0", "op_1"])),
+        "annotation_query": st.sampled_from(
+            [{}, {"environment": "dev"}, {"k": "2"}, {"error": ""}, {"k": ""}]
+        ),
+        "min_duration": st.one_of(st.none(), st.integers(1, 5000)),
+        "max_duration": st.one_of(st.none(), st.integers(1, 5000)),
+        "end_off": st.integers(0, 7200),
+        "lookback_s": st.integers(0, 7200),
+        "limit": st.integers(1, 5),
+    }
+)
+
+
+def _search_rows(specs):
+    return [
+        Row(
+            trace_id=f"{s['trace_n']:016x}",
+            id=f"{i:016x}",
+            parent_id=None,
+            kind=None,
+            name=f"op_{s['name_n']}",
+            timestamp=(1_700_000_000 + s["ts_off"]) * MICROS,
+            duration=s["duration"],
+            local_service=f"svc_{s['svc_n']}",
+            remote_service=None,
+            tag_k=s["tag_k"],
+            env=s["env"],
+            is_error=s["error"],
+        )
+        for i, s in enumerate(specs)
+    ]
+
+
+def _span_matches_request(span: Row, q: dict) -> bool:
+    """zipkin2 QueryRequest.test's single-span conjunct, in Python."""
+    tags = {"environment": span.env, "k": span.tag_k,
+            "error": "true" if span.is_error else None}
+    return (
+        (q["service_name"] is None or span.local_service == q["service_name"])
+        and (q["span_name"] is None or span.name == q["span_name"])
+        and (q["min_duration"] is None
+             or (span.duration is not None and span.duration >= q["min_duration"]))
+        and (q["max_duration"] is None
+             or (span.duration is not None and span.duration <= q["max_duration"]))
+        and all(
+            tags.get(k) is not None if v == "" else tags.get(k) == v
+            for k, v in q["annotation_query"].items()
+        )
+    )
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    specs=st.lists(search_span_strategy, min_size=1, max_size=24),
+    queries=st.lists(search_request_strategy, min_size=1, max_size=4),
+)
+def test_find_traces_in_range_limited_sorted_and_matching(spark, specs, queries):
+    """get_traces against a brute-force recompute: every result is inside
+    [end_ts - lookback, end_ts], at most ``limit`` come back, newest first
+    with ties broken by trace_id, and each is a trace with at least one
+    span matching every condition — and no better trace is left out."""
+    from zipkin_storage_kafka_spark.plans.query_api import QueryRequest, SpanStore
+
+    rows = _search_rows(specs)
+    spans_by_trace: dict[str, list[Row]] = {}
+    for r in rows:
+        spans_by_trace.setdefault(r.trace_id, []).append(r)
+    start = {t: min(s.timestamp for s in ss) for t, ss in spans_by_trace.items()}
+    store = SpanStore(spark.createDataFrame(rows, SPANS_STREAM_SCHEMA))
+    try:
+        for q in queries:
+            end_ts = 1_700_000_000_000 + q["end_off"] * 1000
+            lookback = q["lookback_s"] * 1000
+            request = QueryRequest(
+                service_name=q["service_name"],
+                span_name=q["span_name"],
+                annotation_query=q["annotation_query"],
+                min_duration=q["min_duration"],
+                max_duration=q["max_duration"],
+                end_ts=end_ts,
+                lookback=lookback,
+                limit=q["limit"],
+            )
+            got = [
+                (r["trace_id"], r["trace_timestamp"])
+                for r in store.get_traces(request).collect()
+            ]
+            lo_us, hi_us = (end_ts - lookback) * 1000, end_ts * 1000
+            assert len(got) <= q["limit"]
+            assert all(lo_us <= ts <= hi_us for _, ts in got)
+            assert got == sorted(got, key=lambda g: (-g[1], g[0]))
+            for trace_id, ts in got:
+                assert ts == start[trace_id]
+                assert any(_span_matches_request(s, q) for s in spans_by_trace[trace_id])
+            want = sorted(
+                (
+                    (t, ts)
+                    for t, ts in start.items()
+                    if lo_us <= ts <= hi_us
+                    and any(_span_matches_request(s, q) for s in spans_by_trace[t])
+                ),
+                key=lambda g: (-g[1], g[0]),
+            )[: q["limit"]]
+            assert got == want
+    finally:
+        store.close()

@@ -248,6 +248,48 @@ def test_unmatched_tag_value_excludes(nested_store):
     assert got.count() == 0
 
 
+def test_name_stores_and_trace_many_on_nested_layout(spark, nested_store):
+    """Every name method and get_traces_by_ids read the nested layout's
+    endpoint structs and tags map (they used to fail with
+    UNRESOLVED_COLUMN on ``local_service`` / ``env``)."""
+    store = nested_store
+    assert [r["service_name"] for r in store.get_service_names().collect()] == ["svc_a"]
+    assert store.get_span_names("svc_a").collect() == [("svc_a", "op")]
+    assert store.get_remote_service_names("svc_a").collect() == []
+    # the default autocomplete keys are not tags of these spans
+    assert store.get_autocomplete_keys().collect() == []
+    assert store.get_autocomplete_values("environment").collect() == []
+    traces = {
+        r["trace_id"]: r
+        for r in store.get_traces_by_ids(["00000000000000a1", "00000000000000a3"]).collect()
+    }
+    assert sorted(traces) == ["00000000000000a1", "00000000000000a3"]
+    a1 = traces["00000000000000a1"]
+    assert a1["span_count"] == 1 and a1["trace_timestamp"] == 1_700_000_000 * MICROS
+    assert a1["spans"][0]["tags"] == {"http.method": "GET", "http.path": "/api"}
+    assert traces["00000000000000a3"]["spans"][0]["annotations"][0]["value"] == "ws"
+
+    # configured tag keys and a remote endpoint
+    base = 1_700_000_000 * MICROS
+    client = ("00000000000000b1", None, "1", "CLIENT", "call", base, 5,
+              ("svc_a", None, None, None), ("svc_db", None, None, None), [],
+              {"http.method": "PUT"})
+    spans = store.spans.unionByName(spark.createDataFrame([client], NESTED_SCHEMA))
+    keyed = SpanStore(spans, autocomplete_keys=("http.method", "http.status"))
+    assert [r["tag_key"] for r in keyed.get_autocomplete_keys().collect()] == ["http.method"]
+    assert keyed.get_autocomplete_values("http.method").collect() == [
+        ("http.method", "GET,POST,PUT")
+    ]
+    assert keyed.get_span_names("svc_a").collect() == [("svc_a", "call,op")]
+    assert keyed.get_remote_service_names("svc_a").collect() == [("svc_a", "svc_db")]
+    # without summaries, the trace store derives them from the nested spans
+    got = keyed.get_traces(QueryRequest(remote_service_name="svc_db", limit=10))
+    assert [(r["trace_id"], r["services"]) for r in got.collect()] == [
+        ("00000000000000b1", "svc_a")
+    ]
+    keyed.close()
+
+
 # ---------------------------------------------------------------------------
 # 5. Full DependencyLinker tree semantics (zipkin2 library the reference
 #    delegates to; fixtures from SpanAggregationTopologyTest.java:75-105 and
